@@ -297,6 +297,25 @@ def test_simhash_identical_and_different(spark):
     assert sorted(m.values()) == [1, 2]
 
 
+def test_simhash_udf_null_text_is_none_not_nan():
+    """A NULL text's simhash is an explicit None in the UDF's object
+    output, not a float NaN left for Arrow to coerce."""
+    from zh_ner_tf_spark.operators.dedup import simhash_udf
+
+    out = simhash_udf(2, 16).func(pd.Series(["the quick brown fox", None]))
+    assert isinstance(out[0], int)
+    assert out[1] is None
+
+
+def test_fmt_double_sql_refuses_non_finite_weights():
+    from zh_ner_tf_spark.operators.similarity import _fmt_double_sql
+
+    assert _fmt_double_sql(0.1) == "CAST('0.1' AS DOUBLE)"
+    for bad in (float("inf"), float("-inf"), float("nan")):
+        with pytest.raises(ValueError, match="non-finite"):
+            _fmt_double_sql(bad)
+
+
 def test_brute_force_topk_matches_numpy(spark):
     rng = np.random.RandomState(42)
     corpus = rng.normal(size=(50, 16)).astype(np.float32)

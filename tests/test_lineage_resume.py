@@ -734,3 +734,140 @@ def test_partitioned_snapshot_preserves_string_keys_and_compaction(spark, tmp_pa
     assert plan.count("FileScan") == 1, plan
     full_plan = after._jdf.queryExecution().executedPlan().toString()
     assert full_plan.count("FileScan") == 3, full_plan
+
+
+def _true_bucket_counts(frame, n_buckets):
+    from zh_ner_tf_spark.plans.lineage import bucket_col
+
+    return dict(
+        frame.groupBy(bucket_col("doc_id", n_buckets).alias("b")).count().collect()
+    )
+
+
+def test_manifest_counts_exact_with_row_changing_transform(spark, docs, tmp_path):
+    """rows_in / rows_out per bucket equal the true input and output
+    counts when the transform drops about half the rows — on a fresh run
+    and on a run resumed against a partial manifest — and the read-back
+    has the columns and types a schema-inferring read of the output has."""
+    def halve(df):
+        return _transform(df).filter(F.pmod(F.xxhash64("doc_id", F.lit(7)), F.lit(2)) == 0)
+
+    nb = 8
+    want_in = _true_bucket_counts(docs, nb)
+    want_out = _true_bucket_counts(halve(docs.withColumn("_bucket", F.lit(0))), nb)
+    assert 0 < sum(want_out.values()) < sum(want_in.values())
+
+    out = str(tmp_path / "out")
+    man = str(tmp_path / "manifest")
+    r = run_stage_with_lineage(docs, halve, spark, "h", "doc_id", out, man, nb)
+    got = {x["bucket"]: (x["rows_in"], x["rows_out"])
+           for x in read_manifest(spark, man).collect()}
+    assert got == {b: (want_in[b], want_out.get(b, 0)) for b in want_in}
+    assert r.count() == sum(want_out.values())
+    inferred = spark.read.parquet(out)
+    assert [(f.name, f.dataType) for f in r.schema.fields] == [
+        (f.name, f.dataType) for f in inferred.schema.fields
+    ]
+
+    partial = read_manifest(spark, man).filter(F.col("bucket") < 4)
+    man2 = str(tmp_path / "manifest2")
+    partial.coalesce(1).write.mode("overwrite").parquet(man2)
+    run_stage_with_lineage(docs, halve, spark, "h", "doc_id", out, man2, nb)
+    resumed = read_manifest(spark, man2)
+    assert resumed.count() == len(want_in)
+    got2 = {x["bucket"]: (x["rows_in"], x["rows_out"]) for x in resumed.collect()}
+    assert got2 == got
+
+
+def test_fresh_stage_sink_runs_no_more_jobs_than_a_plain_write(spark, tmp_path):
+    """A fresh-stage publish runs its input exactly once: no probe job,
+    no recount of the input, no read-back of the output, no Spark-written
+    manifest — at most the jobs of a plain partitioned write."""
+    from zh_ner_tf_spark.plans.lineage import bucket_col
+    from zh_ner_tf_spark.sources.sinks import (
+        read_snapshot,
+        snapshot_stage_with_lineage,
+    )
+
+    sc = spark.sparkContext
+    src = spark.range(0, 3000).select(
+        F.col("id").alias("canon_id"), (F.col("id") % 13).alias("freq")
+    ).localCheckpoint()
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    plain = jobs("plain-write", lambda: (
+        src.withColumn("_bucket", bucket_col("canon_id", 4))
+        .write.partitionBy("_bucket").parquet(str(tmp_path / "plain"))
+    ))
+    path = str(tmp_path / "tbl")
+    sink = jobs("lineage-sink", lambda: snapshot_stage_with_lineage(
+        src, spark, path, "s1", "canon_id", 4
+    ))
+    assert plain >= 1
+    assert sink <= plain, (sink, plain)
+    assert read_snapshot(spark, path).count() == 3000
+
+
+def test_driver_and_spark_written_manifests_read_back_together(spark, tmp_path):
+    """The sink's driver-written manifest file and a Spark-written one in
+    the same directory read back through read_manifest with the
+    MANIFEST_SCHEMA types, and both feed resume."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from zh_ner_tf_spark.plans.lineage import MANIFEST_SCHEMA
+
+    df = spark.range(40).select(F.col("id").alias("k"))
+    out = str(tmp_path / "out")
+    man = str(tmp_path / "manifest")
+    run_stage_with_lineage(df, lambda p: p, spark, "s", "k", out, man, 4)
+    driver_files = [f for f in os.listdir(man) if not f.startswith((".", "_"))]
+    assert len(driver_files) == 1 and driver_files[0].startswith("part-")
+    assert not [f for f in os.listdir(man) if f.endswith(".tmp")]
+    want = spark.createDataFrame([], MANIFEST_SCHEMA).schema
+    arrow = pq.read_schema(os.path.join(man, driver_files[0]))
+    assert [(f.name, str(f.type)) for f in arrow] == [
+        ("stage", "string"), ("bucket", "int32"),
+        ("input_fingerprint", "string"), ("rows_in", "int64"),
+        ("rows_out", "int64"), ("status", "string"), ("run_id", "string"),
+        ("committed_at", "double"),
+    ]
+
+    spark.createDataFrame(
+        [("other", 2, "fp", 5, 5, "committed", "r-spark", 1.0)], MANIFEST_SCHEMA
+    ).coalesce(1).write.mode("append").parquet(man)
+    m = read_manifest(spark, man)
+    assert m.dtypes == [(f.name, f.dataType.simpleString()) for f in want]
+    assert m.count() == 5
+    assert {r["stage"] for r in m.collect()} == {"s", "other"}
+    metrics = {r["stage"]: r for r in stage_metrics(spark, man).collect()}
+    assert metrics["s"]["rows_in"] == 40 and metrics["other"]["n_buckets"] == 1
+    # the Spark-written commit of stage "other" resumes like any other
+    pending = resume_filter(df, spark, man, "other", "k", 4)
+    assert {r["_bucket"] for r in pending.select("_bucket").distinct().collect()} == {0, 1, 3}
+
+
+def test_transform_that_prunes_its_input_still_records_rows_in(spark, tmp_path):
+    """When the transform's plan prunes the input away (here a constant
+    false filter), the write pass reports no observed metrics; the
+    manifest still records every bucket's true input count, with zero
+    output rows, and the read-back is an empty frame of the output
+    schema."""
+    df = spark.range(100).select(F.col("id").alias("k"))
+    out = str(tmp_path / "out")
+    man = str(tmp_path / "manifest")
+    r = run_stage_with_lineage(
+        df, lambda p: p.filter(F.lit(False)), spark, "s", "k", out, man, 4
+    )
+    assert r.count() == 0 and r.columns == ["k", "_bucket"]
+    m = read_manifest(spark, man).collect()
+    assert sum(x["rows_in"] for x in m) == 100
+    assert {x["rows_out"] for x in m} == {0}

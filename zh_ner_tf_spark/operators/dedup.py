@@ -316,7 +316,7 @@ def simhash_udf(n: int, bits: int):
     def _simhash(texts: pd.Series) -> pd.Series:
         grams = _gram_hashes_batch(texts, n, distinct=True)
         live = [i for i, g in enumerate(grams) if g is not None]
-        out = np.full(len(grams), np.nan, dtype=object)
+        out = np.full(len(grams), None, dtype=object)
         if live:
             counts = np.fromiter((len(grams[i]) for i in live),
                                  dtype=np.int64, count=len(live))

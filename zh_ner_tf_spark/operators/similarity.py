@@ -16,6 +16,8 @@ checks are stable.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -213,7 +215,11 @@ SRP_ARROW_GEMM_THRESHOLD = 32768
 def _fmt_double_sql(w: float) -> str:
     """Exact SQL double literal: repr() is the shortest round-trip
     decimal form and Java's Double.parseDouble inverts it bit-exactly,
-    so CAST('<repr>' AS DOUBLE) reproduces the Python float."""
+    so CAST('<repr>' AS DOUBLE) reproduces the Python float. A
+    non-finite weight is refused: Spark casts the string 'inf' or 'nan'
+    to NULL, which would silently null every band value built on it."""
+    if not math.isfinite(w):
+        raise ValueError(f"non-finite plane weight {w!r}")
     return f"CAST('{w!r}' AS DOUBLE)"
 
 

@@ -7,33 +7,44 @@ as ``pmod(xxhash64(url), n_buckets)`` — NOT ``spark_partition_id()``,
 which is scheduling-dependent and would break exact resume). For each
 stage run:
 
-  1. plan = input keyed by bucket; committed = manifest rows with
-     status='committed' for (stage, bucket)
-  2. work = input LEFT ANTI JOIN committed  -> only unfinished buckets
+  1. committed = buckets the manifest records as committed for the stage,
+     read on the driver from the manifest's parquet files (at most one row
+     per bucket per run — no Spark job)
+  2. work = input minus committed buckets (a ``NOT IN`` filter on the
+     bucket column) -> only unfinished buckets
   3. outputs are written bucket-partitioned (parquet partitionBy) so a
      re-run overwrites its own bucket idempotently (dynamic partition
-     overwrite), never double-appends
-  4. after the write, manifest rows (stage, bucket, input_fingerprint,
-     rows_in, rows_out, status, run_id) are appended atomically (single
-     task via coalesce(1) on manifest-sized data)
+     overwrite), never double-appends. This write is the ONLY job that
+     runs the input plan: per-bucket ``rows_in`` are observed metrics of
+     that same pass (``DataFrame.observe``), and ``rows_out`` are summed
+     from the parquet footers of each ``_bucket=<b>`` directory
+  4. after the write, the run's manifest rows (stage, bucket,
+     input_fingerprint, rows_in, rows_out, status, run_id, committed_at)
+     are written by the driver as ONE parquet file: a hidden temp file
+     renamed (``os.replace``) to ``part-<run_id>.parquet``, so a run's
+     commit is atomic and lands only after its data write succeeded
 
 Idempotence argument: a crash between 3 and 4 re-runs the bucket and
 overwrites the same partition directory; a crash before 3 changes
 nothing. The manifest is append-only; readers take the latest run_id per
-(stage, bucket). The reference's analog is TF checkpointing
-(model.py:≈200 [R]) — model-state-only; per-partition data lineage is the
-graft extension.
+(stage, bucket). Manifest files written by Spark (older versions of this
+module, or a caller rewriting a manifest) read back alongside the
+driver-written ones: both carry ``MANIFEST_SCHEMA``. The reference's
+analog is TF checkpointing (model.py:≈200 [R]) — model-state-only;
+per-partition data lineage is the graft extension.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 MANIFEST_SCHEMA = (
     "stage string, bucket int, input_fingerprint string, rows_in bigint, "
@@ -46,21 +57,44 @@ def bucket_col(key_col: str, n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
 
 
+def _manifest_files(manifest_dir: str) -> list[str]:
+    """The manifest's visible parquet files (hidden temp files of an
+    in-flight commit and Spark's ``_``-prefixed bookkeeping excluded)."""
+    if not os.path.isdir(manifest_dir):
+        return []
+    return sorted(
+        os.path.join(manifest_dir, f) for f in os.listdir(manifest_dir)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+
+
 def read_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
-    if os.path.exists(manifest_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(manifest_dir)
-    ):
-        return spark.read.parquet(manifest_dir)
+    if _manifest_files(manifest_dir):
+        return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
     return spark.createDataFrame([], MANIFEST_SCHEMA)
 
 
-def committed_buckets(spark: SparkSession, manifest_dir: str, stage: str) -> DataFrame:
-    m = read_manifest(spark, manifest_dir)
-    return (
-        m.filter((F.col("stage") == stage) & (F.col("status") == "committed"))
-        .select("bucket")
-        .distinct()
-    )
+def _committed_bucket_ids(manifest_dir: str, stage: str) -> set[int]:
+    """Buckets the manifest records as committed for ``stage``, read on
+    the driver with pyarrow: no Spark job."""
+    import pyarrow.parquet as pq
+
+    done: set[int] = set()
+    for path in _manifest_files(manifest_dir):
+        t = pq.read_table(path, columns=["stage", "bucket", "status"])
+        for s, b, st in zip(*(t.column(c).to_pylist() for c in t.column_names)):
+            if s == stage and st == "committed":
+                done.add(int(b))
+    return done
+
+
+def _without_buckets(
+    df: DataFrame, done: set[int], key_col: str, n_buckets: int
+) -> DataFrame:
+    with_bucket = df.withColumn("_bucket", bucket_col(key_col, n_buckets))
+    if not done:
+        return with_bucket
+    return with_bucket.filter(~F.col("_bucket").isin(sorted(done)))
 
 
 def resume_filter(
@@ -72,11 +106,44 @@ def resume_filter(
     n_buckets: int,
 ) -> DataFrame:
     """Input minus already-committed buckets (exact resume)."""
-    with_bucket = df.withColumn("_bucket", bucket_col(key_col, n_buckets))
-    done = committed_buckets(spark, manifest_dir, stage).withColumnRenamed(
-        "bucket", "_bucket"
+    return _without_buckets(
+        df, _committed_bucket_ids(manifest_dir, stage), key_col, n_buckets
     )
-    return with_bucket.join(F.broadcast(done), "_bucket", "left_anti")
+
+
+def _append_manifest(
+    manifest_dir: str, stage: str, fingerprint: str, run_id: str,
+    rows: list[tuple[int, int, int]],
+) -> None:
+    """Commit one run's (bucket, rows_in, rows_out) rows as ONE parquet
+    file with the MANIFEST_SCHEMA types: written under a hidden name and
+    renamed into place, so readers see all of the run's rows or none."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pa.schema([
+        ("stage", pa.string()), ("bucket", pa.int32()),
+        ("input_fingerprint", pa.string()), ("rows_in", pa.int64()),
+        ("rows_out", pa.int64()), ("status", pa.string()),
+        ("run_id", pa.string()), ("committed_at", pa.float64()),
+    ])
+    n = len(rows)
+    table = pa.table({
+        "stage": [stage] * n,
+        "bucket": [b for b, _, _ in rows],
+        "input_fingerprint": [fingerprint] * n,
+        "rows_in": [r_in for _, r_in, _ in rows],
+        "rows_out": [r_out for _, _, r_out in rows],
+        "status": ["committed"] * n,
+        "run_id": [run_id] * n,
+        "committed_at": [time.time()] * n,
+    }, schema=schema)
+    os.makedirs(manifest_dir, exist_ok=True)
+    tmp = os.path.join(manifest_dir, f".part-{run_id}.parquet.tmp")
+    # no Arrow schema blob in the footer: the parquet types already carry
+    # MANIFEST_SCHEMA, and every commit pays the extra bytes
+    pq.write_table(table, tmp, store_schema=False)
+    os.replace(tmp, os.path.join(manifest_dir, f"part-{run_id}.parquet"))
 
 
 _STAGE_SIDECAR = "_stage_sidecar.json"
@@ -169,6 +236,71 @@ def _check_stage_sidecar(out_dir: str, manifest_dir: str, stage: str) -> None:
         )
 
 
+def _observed_rows_in(
+    spark: SparkSession, obs: Observation, pending: DataFrame, n_buckets: int
+) -> dict[int, int]:
+    """Per-bucket input counts observed during the write pass.
+
+    Observations complete on Spark's listener bus shortly after the
+    action returns, so the bus is drained before reading (``obs.get``
+    would block forever on one that never completes). A transform that
+    prunes its input away (a constant-false filter, ``limit(0)``) leaves
+    the observation completed with an empty row: then the counts come
+    from one aggregation job over ``pending`` instead."""
+    from py4j.protocol import Py4JJavaError
+
+    jo = obs._jo
+    if not jo.future().isCompleted():
+        try:
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        except Py4JJavaError:
+            pass  # bus still busy after 60 s (TimeoutException): the check below decides
+    row = jo.getRowOrEmpty()
+    if row.isDefined() and row.get().length() == n_buckets:
+        got = obs.get
+        return {b: int(got[f"b{b}"]) for b in range(n_buckets)}
+    counts = dict(pending.groupBy("_bucket").count().collect())
+    return {b: int(counts.get(b, 0)) for b in range(n_buckets)}
+
+
+def _holds_parquet(out_dir: str) -> bool:
+    return any(
+        f.endswith(".parquet")
+        for _root, _dirs, files in os.walk(out_dir) for f in files
+    )
+
+
+def _write_empty_marker(
+    spark: SparkSession, schema: StructType, out_dir: str,
+    manifest_dir: str, stage: str, run_id: str,
+) -> None:
+    """Materialize an empty, schema-carrying output at ``out_dir`` so the
+    read-back (and any snapshot publish of this directory) sees a valid
+    empty table instead of failing on a missing path. Marker + sidecar
+    go into a TEMP dir that is atomically renamed: a crash mid-write
+    leaves only an invisible temp dir, never an out_dir without its
+    ownership sidecar (which would wedge the later supersede delete on
+    the missing-sidecar refusal). Writing an empty frame of the output
+    schema keeps the input plan from running again."""
+    tmp = f"{out_dir}.tmp-{run_id[:8]}"
+    spark.createDataFrame([], schema).write.mode("overwrite").parquet(tmp)
+    _write_stage_sidecar(tmp, manifest_dir, stage)
+    os.rename(tmp, out_dir)
+
+
+def _read_stage(spark: SparkSession, out_dir: str, schema: StructType) -> DataFrame:
+    """Read the stage output back with its known schema (no footer
+    inference job). A bucket-partitioned layout reads as the written
+    columns followed by the ``_bucket int`` partition column; the
+    root-level empty-input marker carries the written schema as is."""
+    if any(n.startswith("_bucket=") for n in os.listdir(out_dir)):
+        schema = StructType(
+            [f for f in schema.fields if f.name != "_bucket"]
+            + [StructField("_bucket", IntegerType())]
+        )
+    return spark.read.schema(schema).parquet(out_dir)
+
+
 def run_stage_with_lineage(
     df: DataFrame,
     transform,
@@ -182,81 +314,80 @@ def run_stage_with_lineage(
     """Execute ``transform`` bucket-partitioned with exact resume.
 
     transform: DataFrame (with _bucket col) -> DataFrame (must keep
-    _bucket). Returns the full stage output (committed ∪ new).
+    _bucket). It builds a plan and runs no action on its input: the
+    write is the one pass over the input, and the per-bucket input
+    counts are observed during it. Returns the full stage output
+    (committed ∪ new).
     """
-    pending = resume_filter(df, spark, manifest_dir, stage, key_col, n_buckets)
+    done = _committed_bucket_ids(manifest_dir, stage)
+    pending = _without_buckets(df, done, key_col, n_buckets)
     run_id = uuid.uuid4().hex
 
-    if pending.limit(1).count() > 0:
-        if (
-            os.path.exists(out_dir)
-            and committed_buckets(spark, manifest_dir, stage)
-            .limit(1).count() == 0
+    # A fresh stage (nothing committed, nothing on disk) goes straight to
+    # the write. A resumed or replayed one first checks for pending rows:
+    # an all-committed stage must not be rewritten, since its directory
+    # fingerprint is what keeps a replayed snapshot publish idempotent.
+    if (done or os.path.exists(out_dir)) and pending.limit(1).count() == 0:
+        schema = transform(pending).schema
+        if not os.path.exists(out_dir) or (
+            not done and not _holds_parquet(out_dir)
         ):
-            # out_dir exists but NO bucket was ever committed: it holds
-            # either the root-level empty-input marker (written below on
-            # a previous empty run) or a crashed write that predates any
-            # manifest commit — both are fully superseded by this run,
-            # and root-level files would otherwise mix with the
-            # partitioned layout and wedge every future read. The
-            # sidecar check guards against the delete firing on a dir
-            # this stage does NOT own (wrong manifest_dir pairing).
-            import shutil
+            # an EMPTY input and no marker yet: nothing was ever written,
+            # or a fresh empty run crashed between its write and the
+            # marker rename below (out_dir then holds only the sidecar)
+            if os.path.exists(out_dir):
+                _check_stage_sidecar(out_dir, manifest_dir, stage)
+                shutil.rmtree(out_dir)
+            _write_empty_marker(spark, schema, out_dir, manifest_dir, stage, run_id)
+        return _read_stage(spark, out_dir, schema)
 
-            _check_stage_sidecar(out_dir, manifest_dir, stage)
-            shutil.rmtree(out_dir)
-        out = transform(pending)
-        per_bucket_in = (
-            pending.groupBy("_bucket").agg(F.count(F.lit(1)).alias("rows_in"))
-        )
-        # ownership sidecar BEFORE the data write: dynamic partition
-        # overwrite never truncates the base dir, so the sidecar
-        # survives, and a writer killed mid-parquet-write leaves a dir
-        # that still names its manifest (the resume path's rmtree guard
-        # accepts it instead of wedging)
-        _write_stage_sidecar(out_dir, manifest_dir, stage)
-        (
-            out.write.mode("overwrite")
-            .partitionBy("_bucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(out_dir)
-        )
-        per_bucket_out = (
-            spark.read.parquet(out_dir)
-            .join(per_bucket_in.select("_bucket"), "_bucket", "left_semi")
-            .groupBy("_bucket")
-            .agg(F.count(F.lit(1)).alias("rows_out"))
-        )
+    if os.path.exists(out_dir) and not done:
+        # out_dir exists but NO bucket was ever committed: it holds
+        # either the root-level empty-input marker (written on a
+        # previous empty run) or a crashed write that predates any
+        # manifest commit — both are fully superseded by this run, and
+        # root-level files would otherwise mix with the partitioned
+        # layout and wedge every future read. The sidecar check guards
+        # against the delete firing on a dir this stage does NOT own
+        # (wrong manifest_dir pairing).
+        _check_stage_sidecar(out_dir, manifest_dir, stage)
+        shutil.rmtree(out_dir)
+    obs = Observation()
+    out = transform(pending.observe(obs, *[
+        F.count_if(F.col("_bucket") == b).alias(f"b{b}")
+        for b in range(n_buckets)
+    ]))
+    # ownership sidecar BEFORE the data write: dynamic partition
+    # overwrite never truncates the base dir, so the sidecar survives,
+    # and a writer killed mid-parquet-write leaves a dir that still
+    # names its manifest (the resume path's rmtree guard accepts it
+    # instead of wedging)
+    _write_stage_sidecar(out_dir, manifest_dir, stage)
+    (
+        out.write.mode("overwrite")
+        .partitionBy("_bucket")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(out_dir)
+    )
+    rows_in = _observed_rows_in(spark, obs, pending, n_buckets)
+    from zh_ner_tf_spark.sources.tables import parquet_dir_row_count
+
+    rows = []
+    for b in range(n_buckets):
+        if rows_in[b] == 0:
+            continue
+        bucket_dir = os.path.join(out_dir, f"_bucket={b}")
+        rows_out = parquet_dir_row_count(bucket_dir) if os.path.isdir(bucket_dir) else 0
+        rows.append((b, rows_in[b], rows_out))
+    if rows:
         fingerprint = json.dumps({"stage": stage, "key": key_col, "n": n_buckets})
-        manifest_rows = (
-            per_bucket_in.join(per_bucket_out, "_bucket", "left")
-            .na.fill(0, ["rows_out"])
-            .select(
-                F.lit(stage).alias("stage"),
-                F.col("_bucket").alias("bucket"),
-                F.lit(fingerprint).alias("input_fingerprint"),
-                F.col("rows_in"),
-                F.col("rows_out"),
-                F.lit("committed").alias("status"),
-                F.lit(run_id).alias("run_id"),
-                F.lit(time.time()).alias("committed_at"),
-            )
-        )
-        manifest_rows.coalesce(1).write.mode("append").parquet(manifest_dir)
-    elif not os.path.exists(out_dir):
-        # first call with an EMPTY input: nothing pending and nothing
-        # ever written — materialize an empty, schema-carrying output so
-        # the read-back (and any snapshot publish of this directory)
-        # sees a valid empty table instead of failing on a missing path.
-        # Write marker + sidecar into a TEMP dir and atomically rename:
-        # a crash mid-write leaves only an invisible temp dir, never an
-        # out_dir without its ownership sidecar (which would wedge the
-        # later supersede delete on the missing-sidecar refusal).
-        tmp = f"{out_dir}.tmp-{run_id[:8]}"
-        transform(pending).write.mode("overwrite").parquet(tmp)
-        _write_stage_sidecar(tmp, manifest_dir, stage)
-        os.rename(tmp, out_dir)
-    return spark.read.parquet(out_dir)
+        _append_manifest(manifest_dir, stage, fingerprint, run_id, rows)
+    elif not done:
+        # fresh stage with an EMPTY input: the write landed no rows, so
+        # out_dir holds only the sidecar — replace it with the marker
+        shutil.rmtree(out_dir)
+        _write_empty_marker(spark, out.schema, out_dir, manifest_dir, stage, run_id)
+    return _read_stage(spark, out_dir, out.schema)
 
 
 def stage_metrics(spark: SparkSession, manifest_dir: str) -> DataFrame:

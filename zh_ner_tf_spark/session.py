@@ -28,7 +28,8 @@ def get_spark(
     # the 1g default GC-thrashes (and corrupts shuffle temp files) on
     # 10^5-row shuffles. Python workers live outside this heap.
     builder = builder.config(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+        "spark.driver.memory",
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
     )
     for k, v in SPARK_CONF.items():
         builder = builder.config(k, v)
@@ -43,6 +44,18 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _default_driver_mem() -> str:
+    """32g, or half the machine's physical memory when that is smaller:
+    a heap sized past physical memory lets the JVM grow until the kernel
+    kills it (with every later Spark call failing on a dead gateway),
+    and the Python workers need the other half."""
+    try:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (ValueError, OSError):
+        return "32g"
+    return f"{min(32 * 1024, phys_mb // 2)}m"
 
 
 def _parallelism(master: str) -> int:
